@@ -1,11 +1,12 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.storage.StorageLevel
 
-/** Distributed union-find: connected components over an undirected edge
-  * list, pure DataFrame implementation of the alternating
+/** Union-find at any scale: connected components over an undirected
+  * edge list — one task's array union-find when the graph fits one task,
+  * otherwise a pure DataFrame implementation of the alternating
   * large-star / small-star algorithm (Kiveris et al., "Connected
   * Components in MapReduce and Beyond", SoCC'14).
   *
@@ -17,6 +18,18 @@ import org.apache.spark.storage.StorageLevel
   * union-find at shuffle scale.
   *
   * Scale design:
+  *  - Size-selected: [[run]] counts the (null-filtered) input edges
+  *    first. A graph of at most [[LocalEdgeBound]] edges (2^20, about
+  *    40 MB of primitive arrays in one task — see the constant) is solved
+  *    in ONE Spark task by an array-backed union-find
+  *    ([[localComponents]]): two Spark jobs — the count, then the
+  *    single-task union-find that fills the checkpoint — instead of
+  *    O(log n) rounds that are almost all per-job scheduling floor at
+  *    that size. A long chain — the worst case for round-based
+  *    propagation — costs it nothing extra. Larger graphs take the star
+  *    rounds below; both paths emit the identical (id, min-id component)
+  *    set.
+  *  Star rounds (graphs above the bound — the 10^12-doc design target):
   *  - O(log n) rounds; every round is TWO shuffles on the node id (the
   *    large-star window + the small-star groupBy — round 6 fused the
   *    small star's dedup into its aggregation, dropping the per-round
@@ -44,22 +57,103 @@ import org.apache.spark.storage.StorageLevel
   */
 object ConnectedComponents {
 
+  /** Largest null-filtered edge count [[run]] solves in one Spark task:
+    * 2^20 edges. At the bound the task holds the edge endpoints (two
+    * 2^20-long arrays, 16 MB), the sorted unique ids (at most 2^21 longs,
+    * 16 MB) and the union-find parent array (at most 2^21 ints, 8 MB) —
+    * about 40 MB of primitive arrays, well inside one executor core's
+    * share of a default heap. */
+  val LocalEdgeBound: Long = 1L << 20
+
   /** @param edges DataFrame with two LongType columns (src, dst) — column
     *              names are positional; self-loops and duplicates are fine.
-    * @param maxIterations must be ≥ 2: the sentinel-folded convergence
-    *              probe (see the loop comment) detects a fixpoint one
-    *              round AFTER reaching it, so an input already at
-    *              fixpoint needs 2 rounds to be declared converged.
+    * @param maxIterations star-round cap, must be ≥ 2: the sentinel-folded
+    *              convergence probe (see the loop comment) detects a
+    *              fixpoint one round AFTER reaching it, so an input already
+    *              at fixpoint needs 2 rounds to be declared converged.
     * @return DataFrame (id: long, component: long) — every node that
-    *         appears in `edges`, component = min node id of its component.
+    *         appears in `edges`, component = min node id of its component;
+    *         an eagerly materialized local checkpoint.
     */
-  def run(edges: DataFrame, maxIterations: Int = 50): DataFrame = {
+  def run(edges: DataFrame, maxIterations: Int = 50): DataFrame =
+    runBounded(edges, maxIterations, LocalEdgeBound)
+
+  /** [[run]] with the one-task bound as a parameter, so specs can force
+    * either path (-1 forces the star rounds on every graph). */
+  private[dedup] def runBounded(edges: DataFrame, maxIterations: Int,
+                                localEdgeBound: Long): DataFrame = {
     require(maxIterations >= 2,
       s"maxIterations must be >= 2 (sentinel probe needs a confirming round), got $maxIterations")
     val spark = edges.sparkSession
     import spark.implicits._
-
     val in = edges.toDF("u", "v").where($"u".isNotNull && $"v".isNotNull)
+    // an RDD count: one narrow job, where Dataset.count would add a
+    // shuffle stage (and, under AQE, a second job) for its final sum
+    val n = in.queryExecution.toRdd.count()
+    if (n <= localEdgeBound) {
+      // coalesce, not repartition: the pipeline's edge inputs are
+      // materialized checkpoints, so one task reading them costs less
+      // than a shuffle stage in front of it
+      val capacity = n.toInt
+      in.as[(Long, Long)].coalesce(1)
+        .mapPartitions(it => localComponents(it, capacity))
+        .toDF("id", "component")
+        .localCheckpoint(true)
+    } else starRounds(in, maxIterations)
+  }
+
+  /** Union-find over one task's edge stream: sorted unique ids in a long
+    * array, an int parent array over their ranks, union toward the
+    * smaller rank (= smaller id) and path halving — so every root is its
+    * component's min id. Emits (id, component) for every endpoint,
+    * self-loop-only nodes included. `sizeHint` presizes the edge buffers
+    * (they grow if the stream is longer). */
+  private[dedup] def localComponents(edges: Iterator[(Long, Long)],
+                                     sizeHint: Int): Iterator[(Long, Long)] = {
+    var us = new Array[Long](math.max(sizeHint, 16))
+    var vs = new Array[Long](us.length)
+    var m = 0
+    while (edges.hasNext) {
+      val (u, v) = edges.next()
+      if (m == us.length) {
+        us = java.util.Arrays.copyOf(us, 2 * m)
+        vs = java.util.Arrays.copyOf(vs, 2 * m)
+      }
+      us(m) = u
+      vs(m) = v
+      m += 1
+    }
+    val ids = java.util.Arrays.copyOf(us, 2 * m)
+    System.arraycopy(vs, 0, ids, m, m)
+    java.util.Arrays.sort(ids)
+    var k = 0
+    var i = 0
+    while (i < ids.length) {
+      if (k == 0 || ids(i) != ids(k - 1)) { ids(k) = ids(i); k += 1 }
+      i += 1
+    }
+    val parent = Array.range(0, k)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    var e = 0
+    while (e < m) {
+      val a = find(java.util.Arrays.binarySearch(ids, 0, k, us(e)))
+      val b = find(java.util.Arrays.binarySearch(ids, 0, k, vs(e)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+      e += 1
+    }
+    Iterator.range(0, k).map(r => (ids(r), ids(find(r))))
+  }
+
+  /** The distributed path: alternating large-star / small-star rounds
+    * over the null-filtered edge list `in` (u, v). */
+  private def starRounds(in: DataFrame, maxIterations: Int): DataFrame = {
+    val spark = in.sparkSession
+    import spark.implicits._
+
     val nodes = in.select($"u".as("id")).union(in.select($"v".as("id")))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -135,24 +229,6 @@ object ConnectedComponents {
     val materialized = out.localCheckpoint(true)
     nodes.unpersist(false)
     materialized
-  }
-
-  /** GraphX fallback — the one place BASELINE.json permits an RDD ("no
-    * RDD fallback except where union-find iteration forces it"). Same
-    * contract as [[run]], but component ids follow GraphX's convention
-    * (min vertex id — identical to ours). Prefer [[run]]: the DataFrame
-    * loop keeps AQE/codegen and avoids RDD serialization; this exists as
-    * the escape hatch for pathological graphs (very long chains) where
-    * Pregel's in-memory vertex state wins. */
-  def runGraphX(edges: DataFrame): DataFrame = {
-    import org.apache.spark.graphx.{Edge, Graph}
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val in = edges.toDF("u", "v").where($"u".isNotNull && $"v".isNotNull)
-    val edgeRdd = in.as[(Long, Long)].rdd.map { case (u, v) => Edge(u, v, ()) }
-    val graph = Graph.fromEdges(edgeRdd, ())
-    val cc = org.apache.spark.graphx.lib.ConnectedComponents.run(graph)
-    cc.vertices.toDF("id", "component")
   }
 
   /** large-star: for every node u, connect every strictly-larger neighbor

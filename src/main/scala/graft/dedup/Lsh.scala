@@ -53,9 +53,14 @@ object Lsh {
           .as("bucket"))
 
   /** Candidate pairs (a < b by doc_id) from band buckets, hot buckets
-    * capped. Returns (pairs, overflowStats). Strategies (output-identical,
-    * parity-tested in LshSpec):
+    * capped. Returns (pairs, overflowStats), both LAZY. Strategies
+    * (output-identical, parity-tested in LshSpec):
     *
+    *  - "auto" (default) — counts → eligibility join: bucket sizes from a
+    *    map-side-combined count (a hot bucket costs one counter per map
+    *    task), then only members of buckets with 2 ≤ n ≤ cap join back
+    *    for pair generation; AQE broadcasts the small eligible set. No
+    *    probe and no strategy choice — see the branch comment.
     *  - "window" — one shuffle on bucket: a window count tags every
     *    member with its bucket size, the capped groupBy reuses the
     *    window's hash partitioning. Cheapest, BUT the window sort
@@ -64,21 +69,12 @@ object Lsh {
     *    no task ever holds an uncapped bucket, at the cost of an extra
     *    pass over the exploded table and the join machinery (~1.3× the
     *    candidate stage).
-    *  - "auto" (default) — probe the ACTUAL max bucket size first, from
-    *    a map-side-combined counts pass (a partial-agg count never
-    *    co-locates a bucket: each reducer sees at most one partial per
-    *    map task), then pick: window while the largest bucket is ≤ 4×
-    *    the cap (bounded co-location — the post-filter collect_list
-    *    co-locates up to cap rows per bucket anyway), salted once a
-    *    genuinely hot bucket exists. The probe pass doubles as the
-    *    overflow-stats pass, so in the calm case auto costs the same
-    *    passes as the forced window strategy. The hazard decision is
-    *    made from data, not guessed from config.
     *
-    * NOTE: "auto" is EAGER — the probe submits a small Spark job at call
-    * time (the other strategies stay fully lazy). Callers should pass
-    * CACHED signature frames (as DedupPipeline.run and dupEdges do), or
-    * the probe re-evaluates the signature expressions once more. */
+    * `sigs` is read by both the counts pass and the member join (and the
+    * overflow frame re-runs the counts when it is evaluated), so callers
+    * should pass a checkpointed or cached signature frame, as
+    * DedupPipeline.run does — otherwise the signature expressions are
+    * evaluated once per consumer. */
   def candidatePairs(sigs: DataFrame, cfg: DedupConfig): (DataFrame, DataFrame) =
     cfg.hotBucketStrategy match {
       case "salted" => candidatePairsSalted(sigs, cfg)

@@ -134,9 +134,10 @@ object SubstringDedup {
     *    up, and eligibility (2 ≤ pn ≤ cap) joined back BEFORE the only
     *    shuffle that co-locates a fingerprint — no task ever holds an
     *    uncapped posting list.
-    *  - "auto" (default): probe the ACTUAL max posting-list size from a
-    *    map-side-combined counts pass (eager — `eligible` is cached by
-    *    the caller), window while ≤ 4× the cap, salted beyond. */
+    *  - "auto" (default): lazy counts → eligibility join — posting
+    *    sizes from a map-side-combined count, then only postings of
+    *    fingerprints with 2 ≤ pn ≤ cap join back (see the branch
+    *    comment); no probe, no strategy choice. */
   private def cappedPostingBuckets(eligible: DataFrame, cfg: DedupConfig): DataFrame = {
     val postings = eligible.select(F.col("doc_id"), F.col("len"), F.col("nfp"),
       F.explode(F.col("fp")).as("f"))

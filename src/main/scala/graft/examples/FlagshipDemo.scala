@@ -50,15 +50,6 @@ object FlagshipDemo {
     val b = resSalted.clusters.orderBy("url").collect().map(_.toString).toSeq
     println(s"SALTED-MATCHES-WINDOW=${a == b}")
 
-    // GraphX union-find fallback on the same verified edges
-    val sigs = DedupPipeline.signatures(pages, DedupConfig(allowedLangs = Some(Set("en"))))._1
-      .where(F.col("minhash").isNotNull)
-    val edges = DedupPipeline.dupEdges(sigs, DedupConfig(allowedLangs = Some(Set("en"))))
-    val gx = graft.dedup.ConnectedComponents.runGraphX(edges)
-    val dfcc = graft.dedup.ConnectedComponents.run(edges)
-    println(s"GRAPHX-COMPONENTS=${gx.select("component").distinct().count()} " +
-      s"DF-COMPONENTS=${dfcc.select("component").distinct().count()}")
-
     // minimal-schema run (url, text, lang only)
     val slim = pages.select("url", "text", "lang")
     val res2 = DedupPipeline.run(slim, DedupConfig(substringPass = false))

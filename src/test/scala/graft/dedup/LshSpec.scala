@@ -44,8 +44,8 @@ class LshSpec extends SparkSpec {
     def pairsOf(strategy: String, cap: Int) = Lsh.candidatePairs(sigs,
       DedupConfig(hotBucketStrategy = strategy, maxBucketSize = cap))._1
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    // calm regime (default cap → probe picks window) and hot regime
-    // (cap 1 → every shared bucket is >4× cap → probe picks salted):
+    // calm regime (default cap) and hot regime (cap 1 → every shared
+    // bucket overflows):
     // auto must be output-identical to the forced strategies in both
     for (cap <- Seq(DedupConfig().maxBucketSize, 1)) {
       val auto = pairsOf("auto", cap)
@@ -54,14 +54,14 @@ class LshSpec extends SparkSpec {
     }
   }
 
-  test("auto picks salted on a planted mega-bucket, output-identical, calm pairs intact") {
+  test("auto drops a planted mega-bucket, output-identical to forced strategies") {
     val spark2 = spark
     import spark2.implicits._
     // mega group: 30 docs share one signature → every band bucket holds 30
-    // members = 15× the cap of 2 (> 4×cap, the auto salted trigger);
+    // members = 15× the cap of 2, so auto's eligibility filter drops it;
     // pair groups: 2-member signatures sit exactly at the cap → pairs must
-    // still be emitted, so the salted branch is parity-checked against a
-    // NONEMPTY pair set while the mega bucket is dropped
+    // still be emitted, so auto is parity-checked against a NONEMPTY pair
+    // set while the mega bucket is dropped
     val mega = (0 until 30).map(i => (100L + i, Array.fill(128)(7L)))
     val pairGroups = (0 until 5).flatMap(g => Seq(
       (200L + 2 * g, Array.fill(128)(1000L + g)),
@@ -76,7 +76,7 @@ class LshSpec extends SparkSpec {
     assert(auto === run("window"))
     assert(auto === run("salted"))
     assert(!auto.exists { case (a, b) => a >= 100L && a < 130L }) // mega dropped
-    // the auto probe's stats pass reports the mega bucket at every band
+    // auto's lazy overflow frame reports the mega bucket at every band
     val (_, overflow) = Lsh.candidatePairs(sigs,
       DedupConfig(maxBucketSize = 2, hotBucketStrategy = "auto"))
     assert(overflow.head().getLong(0) >= 32L)
@@ -118,16 +118,17 @@ class LshSpec extends SparkSpec {
     p.unpersist(); sigs.unpersist()
   }
 
-  test("GraphX CC fallback agrees with the DataFrame loop") {
+  test("star rounds and the one-task CC path agree on a random graph") {
     val spark2 = spark
     import spark2.implicits._
     val rnd = new scala.util.Random(5)
     val edges = Seq.fill(200)((rnd.nextInt(300).toLong, rnd.nextInt(300).toLong))
       .filter { case (a, b) => a != b }
-    val df = ConnectedComponents.run(edges.toDF("u", "v"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val gx = ConnectedComponents.runGraphX(edges.toDF("u", "v"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(df === gx)
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    val oneTask = labels(ConnectedComponents.run(edges.toDF("u", "v")))
+    val stars = labels(ConnectedComponents.runBounded(edges.toDF("u", "v"), 50, -1L))
+    assert(oneTask.nonEmpty)
+    assert(oneTask === stars)
   }
 }
